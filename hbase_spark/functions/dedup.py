@@ -204,6 +204,12 @@ def minhash_signature(shingle_col: Column, num_hashes: int = 128) -> Column:
     single ``aggregate`` pass, so the per-document work is
     O(shingles * k) integer ops, not k string-hash passes.  All values
     stay < 2^62, safe under ANSI long arithmetic.
+
+    A per-row convenience only: it hashes gram STRINGS, while the
+    banding pipeline (``minhash_signatures``, ``minhash_candidates``,
+    ``minhash_pairs`` and the streaming twin) hashes token tuples with
+    multi-argument xxhash64, so its signatures and band buckets never
+    agree with theirs — do not mix the two.
     """
     consts = F.array(
         *[
@@ -286,14 +292,18 @@ def minhash_signatures(
     shingle_n: int = 3,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, _sig[, *extra_cols]) signature frame — a pure map stage,
+    """(_id, *extra_cols, _sig) signature frame — a pure map stage,
     NO shuffle, built from the shared ``_gram_hash_exprs`` pipeline:
     grams are hashed with one multi-argument xxhash64 over the n
     tokens (r11 — the gram-string ``concat_ws`` assembly this replaced
     measured ~5x slower at r10, and the string allocation volume grew
     with corpus size), and the k signature slots are integer universal
     hashes folded in a single nested transform.  At 100 TB signatures
-    stay embarrassingly parallel map work with zero exchange."""
+    stay embarrassingly parallel map work with zero exchange.
+
+    ``extra_cols`` are carried through every stage, so they must not
+    use the pipeline's intermediate names ``_t``, ``_gh``, ``_harr``
+    or ``_sig`` (nor ``_id``)."""
     extras = [_ident(c) for c in extra_cols]
     gh, harr, sig = _gram_hash_exprs(num_hashes, shingle_n)
     return (

@@ -114,44 +114,35 @@ def stream_minhash_candidates(
     num_hashes: int = 128,
     bands: int = 32,
     shingle_n: int = 3,
-    cap: int = 1024,
     watermark: str = "1 hour",
     state_ttl_ms: int = 24 * 3_600_000,
 ) -> DataFrame:
     """Streaming MinHash near-dup detection — the batch
     ``minhash_candidates`` banding as an ingest-time operator: a new
-    document becomes a candidate pair with EVERY earlier document that
-    shares any LSH band bucket within the state horizon.  This is the
-    near-dup twin of ``stream_dedup`` (exact) and ``stream_url_dedup``
-    (URL): what a continuously-fed crawl actually wants, since batch
-    near-dedup over the full corpus can't run per-arrival.
+    document becomes a candidate pair with every document that shares
+    any LSH band bucket and whose event time lies within
+    ``state_ttl_ms`` of its own (``|ts_a - ts_b| <= state_ttl_ms``,
+    inclusive).  This is the near-dup twin of ``stream_dedup`` (exact)
+    and ``stream_url_dedup`` (URL).
 
-    Signatures and band buckets are computed MAP-SIDE with the exact
+    Signatures and band buckets are computed map-side with the exact
     SQL pipeline the batch path uses (``minhash_signatures`` +
-    ``_band_bucket_expr`` — multi-arg xxhash64 gram hashes, one nested
-    transform for the k slots, ``xxhash64(band, slots...)`` bucket
-    hash), so stream and batch agree on what "same bucket" means — the
-    stream==batch law is pytest-pinned.  The shared selectExpr form
-    also keeps per-micro-batch query construction off the py4j
-    round-trip path (the per-slot Column/lambda form this replaced
-    cost seconds of driver time PER BATCH at 128 hashes).  State per bucket is a capped long-id list (first
-    ``cap`` arrivals; later members still PAIR with the stored ones
-    but stop being stored — the same truncation contract as the batch
-    ``_capped_groups`` default), evicted ``state_ttl_ms`` after the
-    bucket's latest event time once the watermark passes (event-time
-    timeout).  Output: (a, b) candidate id pairs, a < b, distinct per
-    micro-batch per bucket; the same pair can re-emit from another
-    band's bucket — downstream exact-Jaccard verification (join the
-    doc store, ``minhash_pairs``-style) naturally dedups.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    ``_band_bucket_expr``), so stream and batch agree on what "same
+    bucket" means — the stream==batch law is pytest-pinned.  Pairing
+    is a watermarked stream-stream inner self-join on ``_bucket``
+    (one ``StreamingSymmetricHashJoin``, no Python node): each side
+    keeps its (id, event time, bucket) rows until the watermark
+    passes ``event time + state_ttl_ms``, so state is bounded by the
+    watermark horizon, not by a per-bucket member count.
 
+    Output: (a, b) candidate id pairs, a < b.  The same pair re-emits
+    from every band bucket the two docs share, and a re-delivered doc
+    id pairs again — downstream exact-Jaccard verification (join the
+    doc store, ``minhash_pairs``-style) dedups.  The self-join reads
+    ``stream`` twice, so the checkpoint records two sources (a Kafka
+    source gets two consumers); a checkpoint written by the earlier
+    single-source pandas state form refuses to restart.
+    """
     from hbase_spark.functions.dedup import (
         _band_bucket_expr,
         _ident,
@@ -160,77 +151,25 @@ def stream_minhash_candidates(
 
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
-    sigs = minhash_signatures(
+    banded = minhash_signatures(
         stream, id_col=id_col, text_col=text_col,
         num_hashes=num_hashes, shingle_n=shingle_n,
         extra_cols=(ts_col,),
     ).selectExpr(
         "_id",
-        f"CAST({_ident(ts_col)} AS LONG) AS _ts_ms",
         f"timestamp_millis({_ident(ts_col)}) AS _event_time",
-        "_sig",
-    )
-    banded = sigs.selectExpr(
-        "_id", "_ts_ms", "_event_time",
         _band_bucket_expr(num_hashes, bands),
-    )
-
-    out_schema = StructType(
-        [StructField("a", LongType()), StructField("b", LongType())]
-    )
-    state_schema = StructType(
-        [StructField("ids", ArrayType(LongType()))]
-    )
-    ttl = int(state_ttl_ms)
-
-    def _fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        seen = list(state.get[0]) if state.exists else []
-        frames = [p for p in pdfs]
-        batch = (
-            pd.concat(frames)
-            if frames
-            else pd.DataFrame(columns=["_id", "_ts_ms"])
-        )
-        new = sorted(set(int(x) for x in batch["_id"]) - set(seen))
-        pairs = set()
-        for x in new:
-            for s in seen:
-                pairs.add((min(x, s), max(x, s)))
-        for i, x in enumerate(new):
-            for y in new[i + 1:]:
-                pairs.add((x, y))
-        room = cap - len(seen)
-        if room > 0:
-            seen = seen + new[:room]
-        state.update((seen,))
-        if len(batch):
-            # the raw epoch-millis column, NOT the converted
-            # _event_time: Arrow hands timestamps over as
-            # session-timezone-naive, and pandas' .timestamp() would
-            # re-interpret them as UTC — shifting the timeout by the
-            # zone offset under any non-UTC session timezone (and a
-            # negative shift can land below the watermark and raise).
-            latest = int(batch["_ts_ms"].max())
-            state.setTimeoutTimestamp(latest + ttl)
-        if pairs:
-            ordered = sorted(pairs)
-            yield pd.DataFrame(
-                {"a": [p[0] for p in ordered], "b": [p[1] for p in ordered]}
-            )
-
+    ).withWatermark("_event_time", watermark)
+    ttl = f"INTERVAL {int(state_ttl_ms)} MILLISECONDS"
     return (
-        banded.withWatermark("_event_time", watermark)
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            _fn,
-            out_schema,
-            state_schema,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
+        banded.alias("l")
+        .join(
+            banded.alias("r"),
+            F.expr(
+                "l._bucket = r._bucket AND l._id < r._id"
+                f" AND r._event_time BETWEEN l._event_time - {ttl}"
+                f" AND l._event_time + {ttl}"
+            ),
         )
+        .selectExpr("l._id AS a", "r._id AS b")
     )

@@ -4,6 +4,7 @@ yield exactly the same resolved state as batch resolve() over all
 cells; plus WALPlayer time-windowed replay and the latest-view stream.
 """
 
+import re
 import shutil
 import tempfile
 
@@ -713,14 +714,12 @@ def test_stream_minhash_candidates_equals_batch_banding(spark, dirs):
 
 
 def test_stream_minhash_state_timeout_non_utc_timezone(spark, dirs):
-    """The state timeout must come from the RAW epoch millis, not a
-    pandas conversion of the session-tz-naive event time: under a
-    non-UTC session timezone the naive->UTC reinterpretation shifts
-    the timeout by the zone offset, and with a short TTL a negative
-    shift lands BELOW the watermark — setTimeoutTimestamp raises and
-    the query dies.  Pin the fix by running with a UTC-5 zone and a
-    1s TTL: the query must complete and still emit the cross-batch
-    pair."""
+    """The pairing horizon is an event-time bound on the raw epoch
+    millis, ``|ts_a - ts_b| <= state_ttl_ms`` (inclusive), and must not
+    shift with the session timezone.  Run under a UTC-5 zone with a 1s
+    TTL: doc 2 (1s after doc 1) pairs with doc 1 across micro-batches,
+    and doc 3 (the same text as doc 2, 2s after doc 1) pairs with doc 2
+    but not with doc 1, although it shares every bucket doc 2 shares."""
     from hbase_spark.streaming.dedup import stream_minhash_candidates
 
     base = (
@@ -729,12 +728,14 @@ def test_stream_minhash_state_timeout_non_utc_timezone(spark, dirs):
     )
     schema = "doc_id long, text string, ts long"
     log = dirs["log"]
-    spark.createDataFrame(
-        [(1, base, 1_700_000_000_000)], schema
-    ).coalesce(1).write.mode("append").parquet(log)
-    spark.createDataFrame(
-        [(2, base + " extra", 1_700_000_001_000)], schema
-    ).coalesce(1).write.mode("append").parquet(log)
+    for row in [
+        (1, base, 1_700_000_000_000),
+        (2, base + " extra", 1_700_000_001_000),
+        (3, base + " extra", 1_700_000_002_000),
+    ]:
+        spark.createDataFrame([row], schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(log)
 
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
@@ -760,9 +761,94 @@ def test_stream_minhash_state_timeout_non_utc_timezone(spark, dirs):
             (r.a, r.b)
             for r in spark.sql("SELECT DISTINCT a, b FROM mh_tz").collect()
         }
-        assert (1, 2) in got
+        assert got == {(1, 2), (2, 3)}
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
+
+
+def test_stream_minhash_plan_is_native_join(spark, dirs):
+    """The streaming near-dup operator runs as one stream-stream
+    symmetric hash join inside the engine: no pandas state function
+    and no other Python node in the executed micro-batch plan."""
+    from hbase_spark.streaming.dedup import stream_minhash_candidates
+
+    schema = "doc_id long, text string, ts long"
+    spark.createDataFrame(
+        [(1, "a b c d e f", 1_700_000_000_000),
+         (2, "a b c d e f g", 1_700_000_001_000)],
+        schema,
+    ).coalesce(1).write.parquet(dirs["log"])
+    q = (
+        stream_minhash_candidates(
+            spark.readStream.schema(schema).parquet(dirs["log"]),
+            bands=16, num_hashes=64,
+        )
+        .writeStream.format("noop")
+        .option("checkpointLocation", dirs["ckpt"])
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert "StreamingSymmetricHashJoin" in plan
+    assert not re.search("Python|InPandas|ArrowEval", plan), plan
+
+
+def test_stream_minhash_refuses_old_scheme_checkpoint(spark, dirs):
+    """A checkpoint written by the earlier shape of the operator (one
+    source, a pandas state function keyed on ``_bucket``) must refuse
+    to restart rather than silently drop the pairs its state held.  A
+    parquet sink is used because the memory sink refuses every
+    append-mode recovery, which would hide the check."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from hbase_spark.functions.dedup import (
+        _band_bucket_expr,
+        minhash_signatures,
+    )
+    from hbase_spark.streaming.dedup import stream_minhash_candidates
+
+    schema = "doc_id long, text string, ts long"
+    spark.createDataFrame(
+        [(1, "a b c d e f", 1_700_000_000_000)], schema
+    ).coalesce(1).write.parquet(dirs["log"])
+
+    def stream():
+        return spark.readStream.schema(schema).parquet(dirs["log"])
+
+    def old_state_fn(key, pdfs, state):
+        seen = list(state.get[0]) if state.exists else []
+        state.update((seen + [int(i) for p in pdfs for i in p["_id"]],))
+        yield from ()
+
+    old = (
+        minhash_signatures(stream(), num_hashes=64, extra_cols=("ts",))
+        .selectExpr(
+            "_id", "timestamp_millis(ts) AS _event_time",
+            _band_bucket_expr(64, 16),
+        )
+        .withWatermark("_event_time", "1 hour")
+        .groupBy("_bucket")
+        .applyInPandasWithState(
+            old_state_fn, "a long, b long", "ids array<long>", "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+    sink = dirs["table"]
+
+    def run(df):
+        q = (
+            df.writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", dirs["ckpt"])
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    run(old)
+    with pytest.raises(Exception, match="sources in the checkpoint"):
+        run(stream_minhash_candidates(stream(), bands=16, num_hashes=64))
 
 
 def test_replay_wals_bracket_hooks(spark, dirs):

@@ -125,7 +125,7 @@ def main() -> None:
 
     bench("stream_url_dedup", run_url)
 
-    # 5. stream_minhash_candidates: stateful LSH banding (Python state)
+    # 5. stream_minhash_candidates: LSH banding as a stream-stream self-join
     def run_minhash():
         out = stream_minhash_candidates(
             doc_stream(), num_hashes=64, bands=16, watermark="1 hour"
